@@ -50,7 +50,7 @@ object Tuning {
     * the same SparkSession during the scope would run with cached-plan
     * re-partitioning enabled, which is exactly the order-sensitive
     * double-rounding hazard the class doc warns about. Every entry
-    * point in this repo (Bench, Verify, ProbeTmp, the test suites)
+    * point in this repo (Bench, Verify, the test suites)
     * plans queries from a single driver thread, so the scope cannot
     * leak; a multi-threaded host must wrap its planning in
     * `spark.newSession()` clones (per-session confs) before using the

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, LongType}
@@ -289,7 +290,7 @@ object Dedup {
     * Returns (id, rep) for ids appearing in ≥ 1 pair.
     */
   def components(pairs: DataFrame,
-      maxIters: Int = 20): DataFrame = graft.core.Tuning.withCachedPlanAqe(pairs.sparkSession) {
+      maxIters: Int = 20): DataFrame = walkerScope(pairs) { sc0 =>
     // pre-partitioned on the join key (r19): every round joins sym on
     // dst, and a cached frame carries its partitioning into the join's
     // distribution requirement — hash-clustering sym by dst ONCE saves
@@ -299,41 +300,52 @@ object Dedup {
       .unionAll(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .repartition(col("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = sym.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("rep"))
-      .localCheckpoint(true)
-    var iters = 0
-    var done = false
-    val sc0 = pairs.sparkSession.sparkContext
-    while (!done && iters < maxIters) {
-      sc0.setJobDescription(s"dedup: components round $iters")
-      val nbrMin = sym.join(labels, sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("rep"))
-      // the previous label rides the aggregation as a tagged row
-      // (each id contributes its own label exactly once), so the
-      // fixpoint probe IS the round's materializing action (r20): the
-      // LAZY localCheckpoint truncates the plan to a LogicalRDD leaf
-      // at build time (same lineage discipline as before — a persist
-      // here instead grows the logical tree EXPONENTIALLY, each round
-      // referencing the previous frame several times; measured: the
-      // driver hung stringifying the plan) but defers the final-stage
-      // work into the changed-row count below, which fills the
-      // checkpoint blocks and decides convergence in ONE job where
-      // the r19 shape paid an eager checkpoint job PLUS a probe job
-      // (the rounds are job-launch-bound at bench scale).
-      val next = labels.select(col("id"), col("rep"), lit(true).as("own"))
-        .unionAll(nbrMin.select(col("id"), col("rep"), lit(false).as("own")))
-        .groupBy("id")
-        .agg(min("rep").as("rep"), min(when(col("own"), col("rep"))).as("prev"))
-        .localCheckpoint(false)
-      done = next.filter(col("rep") =!= col("prev")).count() == 0L
-      labels = next.select("id", "rep")
-      iters += 1
+    try {
+      sc0.setJobDescription("dedup: components init")
+      var labels = sym.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("rep"))
+        .localCheckpoint(true)
+      var iters = 0
+      var done = false
+      while (!done && iters < maxIters) {
+        sc0.setJobDescription(s"dedup: components round $iters")
+        val nbrMin = sym.join(labels, sym("dst") === labels("id"))
+          .select(sym("src").as("id"), col("rep"))
+        // the previous label rides the aggregation as a tagged row
+        // (each id contributes its own label exactly once), so the
+        // fixpoint probe IS the round's materializing action (r20): the
+        // LAZY localCheckpoint truncates the plan to a LogicalRDD leaf
+        // at build time (same lineage discipline as before — a persist
+        // here instead grows the logical tree EXPONENTIALLY, each round
+        // referencing the previous frame several times; measured: the
+        // driver hung stringifying the plan) but defers the final-stage
+        // work into the changed-row count below, which fills the
+        // checkpoint blocks and decides convergence in ONE job where
+        // the r19 shape paid an eager checkpoint job PLUS a probe job
+        // (the rounds are job-launch-bound at bench scale).
+        val next = labels.select(col("id"), col("rep"), lit(true).as("own"))
+          .unionAll(nbrMin.select(col("id"), col("rep"), lit(false).as("own")))
+          .groupBy("id")
+          .agg(min("rep").as("rep"), min(when(col("own"), col("rep"))).as("prev"))
+          .localCheckpoint(false)
+        done = next.filter(col("rep") =!= col("prev")).count() == 0L
+        labels = next.select("id", "rep")
+        iters += 1
+      }
+      require(done, s"components did not converge in $maxIters iterations")
+      labels
+    } finally sym.unpersist(false)
+  }
+
+  /** A components walker's scope: cached-plan AQE on, and the job
+    * label the walker sets released on every path, the throw path
+    * included (its first label goes up before its first action).
+    */
+  private def walkerScope(pairs: DataFrame)(body: SparkContext => DataFrame): DataFrame = {
+    val sc = pairs.sparkSession.sparkContext
+    graft.core.Tuning.withCachedPlanAqe(pairs.sparkSession) {
+      try body(sc) finally sc.setJobDescription(null)
     }
-    sc0.setJobDescription(null)
-    sym.unpersist(false)
-    require(done, s"components did not converge in $maxIters iterations")
-    labels
   }
 
   /** Connected components by ALTERNATING large-star/small-star
@@ -370,10 +382,11 @@ object Dedup {
     * where 2-3 min-label rounds beat 2 shuffles × log² rounds.
     */
   def componentsStar(pairs: DataFrame,
-      maxIters: Int = 25): DataFrame = graft.core.Tuning.withCachedPlanAqe(pairs.sparkSession) {
+      maxIters: Int = 25): DataFrame = walkerScope(pairs) { sc0 =>
     // canonical undirected edge: (u < v), self-loops dropped. All
     // rewriting below emits (min, other) pairs, so canonical order is
     // re-established by construction each round.
+    sc0.setJobDescription("dedup: components* init")
     var e = pairs
       .select(least(col("id_a"), col("id_b")).as("u"),
         greatest(col("id_a"), col("id_b")).as("v"))
@@ -381,7 +394,6 @@ object Dedup {
       .localCheckpoint(true)
     var iters = 0
     var done = e.isEmpty
-    val sc0 = pairs.sparkSession.sparkContext
     while (!done && iters < maxIters) {
       sc0.setJobDescription(s"dedup: components* round $iters")
       // large-star: center c over its FULL neighborhood. m_c =
@@ -454,7 +466,6 @@ object Dedup {
       e = tagged.where(col("in_ss") === lit(1)).select("u", "v")
       iters += 1
     }
-    sc0.setJobDescription(null)
     require(done, s"componentsStar did not converge in $maxIters iterations")
     // the stable edge set is a star forest rooted at component
     // minima: non-roots appear exactly once as v, roots label

@@ -101,7 +101,10 @@ object FhirPipeline {
         col("city"), col("state"), col("postalCode"), col("country"))
 
   /** prep_patient_df + the ingest-side gender_inferred CASE
-    * (build_graph.py:233-239) and year-only birthDate repair.
+    * (build_graph.py:233-239) and year-only birthDate repair. A
+    * birthDate that is not a calendar date (an extracted `2023-02-29`)
+    * becomes null: `try_cast`, because under Spark 4's ANSI default a
+    * plain cast throws and one bad record would abort the batch.
     */
   def prepPatient(df: DataFrame): DataFrame =
     df.select(
@@ -111,7 +114,7 @@ object FhirPipeline {
       array_join(col("name.given"), " ").as("givenName"),
       col("gender"),
       when(length(col("birthDate")) === 4, concat(col("birthDate"), lit("-01-01")))
-        .otherwise(col("birthDate")).cast(DateType).as("birthDate"),
+        .otherwise(col("birthDate")).try_cast(DateType).as("birthDate"),
       col("phone"), col("email"), col("maritalStatus"), col("primaryLanguage"))
       .withColumn("gender_inferred",
         when(col("gender").isin("male", "Male"), "M")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -90,6 +91,25 @@ class DedupSpec extends SparkSpec {
     assert(got === Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     val empty = Seq.empty[(Long, Long)].toDF("id_a", "id_b")
     assert(Dedup.componentsStar(empty).isEmpty)
+  }
+
+  test("component walkers release their job label and cache when evaluation throws") {
+    val sc = spark.sparkContext
+    val cm = spark.sharedState.cacheManager
+    // over a range, not a local relation: the optimizer would fold
+    // the projection, and throw, before the walker acquired anything
+    val bad = spark.range(1, 3).select(col("id").as("id_a"),
+      when(col("id") > 1L, raise_error(lit("bad pair"))).otherwise(col("id") + 1).as("id_b"))
+    val walkers = Seq[(String, DataFrame => DataFrame)](
+      "components" -> (Dedup.components(_)), "componentsStar" -> (Dedup.componentsStar(_)))
+    for ((name, walk) <- walkers) {
+      cm.clearCache()
+      val persisted = sc.getPersistentRDDs.keySet
+      intercept[Exception](walk(bad))
+      assert(sc.getLocalProperty("spark.job.description") === null, name)
+      assert(cm.isEmpty, s"$name left a cached frame")
+      assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty, s"$name left a persistent RDD")
+    }
   }
 
   test("keep-one-per-group composes from components") {
